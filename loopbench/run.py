@@ -27,6 +27,7 @@ import stats  # noqa: E402
 
 WORKLOADS = ("train_pipeline", "feedback_loop", "serve_predict",
              "corpus_dedup")
+LAYERS = ("io", "ml", "feature", "streaming", "serving", "text")
 JVM_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 850
 HEAP = "3g"
@@ -95,8 +96,11 @@ def run_jvm(cp, args, run_dir):
     os.makedirs(tmp)
     # A fixed-size heap and the parallel collector: under G1's adaptive
     # sizing, peak RSS spread about ten times wider across seeds and
-    # feedback_loop's freshness about twice as wide.
+    # feedback_loop's freshness about twice as wide. Fixed generation
+    # sizes too: when the collector's size policy grew eden in some runs
+    # and not others, serve_predict's peak RSS read ~980 or ~1160 MB.
     cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+UseParallelGC",
+           "-XX:-UseAdaptiveSizePolicy",
            f"-Djava.io.tmpdir={tmp}",
            "-Dspark.ui.enabled=false",
            "-Dlog4j2.configurationFile=" +
@@ -128,12 +132,15 @@ def run_jvm(cp, args, run_dir):
 
 
 def summary(raw, trace):
-    """One human-readable line, in the workload's own metric names."""
-    if trace:
-        return "traced run; per-layer metrics below"
+    """One human-readable line, in the workload's own metric names (a
+    traced run: its layer times)."""
     e, c = stats.end_to_end(raw), stats.cold_and_tail(raw)
     w = raw["workload"]
-    if w == "train_pipeline":
+    if trace:
+        # the workload's own layer times, BENCHMARK.json's or not
+        named = {k: stats.median(v) for k, v in raw["series"].items()
+                 if k.split(".")[0] in LAYERS and k.endswith("_s")}
+    elif w == "train_pipeline":
         named = {"pipeline_s": e["latency_ms"] / 1e3,
                  "pipeline_first_s": c["op.first_ms"] / 1e3}
     elif w == "feedback_loop":
@@ -143,11 +150,19 @@ def summary(raw, trace):
     elif w == "serve_predict":
         n = len(raw["open_loop"])
         q = stats.tail_quantile(n)
+        s, v = raw["series"], raw["values"]
         named = {"predict_p50_ms": e["latency_ms"],
                  f"predict_p{q:g}_ms": c["serving.predict_tail_ms"],
                  "open_loop_samples": n,
                  "samples_beyond_tail": stats.beyond(n, q),
-                 "serve_rps": e["rate_per_s"],
+                 "serve_rps": v["serving.capacity_rps"],
+                 "capacity_clients": int(v["serving.capacity_clients"]),
+                 "load_frac": v["serving.load_frac"],
+                 "sweep": "/".join(
+                     f"{int(c_)}:{r:.0f}rps,p99={p:.1f}ms"
+                     for c_, r, p in zip(s["sweep_clients"], s["sweep_rps"],
+                                         s["sweep_p99_ms"])),
+                 "keepalive_ms": stats.median(s["serving.keepalive_ms"]),
                  "cold_ms": c["op.first_ms"]}
     else:
         named = {"dedup_s": c["op.first_ms"] / 1e3}

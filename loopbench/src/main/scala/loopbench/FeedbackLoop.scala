@@ -161,8 +161,7 @@ object FeedbackLoop {
           "event_ts", s"${loop.dir}/ckpt-features",
           Trigger.AvailableNow()))
       }
-      ctx.op(freshMs, Ctx.ms(t0), answers.size * ObsPerRequest, on,
-        warmup = r <= WarmupRounds)
+      ctx.op(freshMs, on, warmup = r <= WarmupRounds)
       if (on) ctx.layers(t0, "streaming.retrain", "serving.reload",
         "serving.round", "feature.stream_import")
     } finally loop.server.stop()

@@ -27,16 +27,14 @@ final case class Ctx(session: () => SparkSession, seed: Long,
     on
   }
 
-  /** Record one operation: its headline latency, its wall time, the
-    * items it processed, whether it was traced, and whether it is part
-    * of the warm-up that steady-state readings leave out.
+  /** Record one operation: its headline latency, whether it was
+    * traced, and whether it is part of the warm-up that steady-state
+    * readings leave out.
     */
-  def op(ms: Double, wallMs: Double, items: Double, traced: Boolean,
-         warmup: Boolean): Unit = {
-    rec.add("op_ms", ms); rec.add("op_wall_ms", wallMs)
-    rec.add("op_items", items); rec.add("op_traced", if (traced) 1 else 0)
+  def op(ms: Double, traced: Boolean, warmup: Boolean): Unit = {
+    rec.add("op_ms", ms); rec.add("op_traced", if (traced) 1 else 0)
     rec.add("op_warmup", if (warmup) 1 else 0)
-    Ctx.log(f"op done: $ms%.0f ms (wall $wallMs%.0f ms)")
+    Ctx.log(f"op done: $ms%.0f ms")
   }
 
   /** Per-operation busy seconds of each layer call since `t0`. */
@@ -158,9 +156,7 @@ object Main {
       finally s.close()
     }
 
-  /** Every span, and the listener's counter totals per span name (all
-    * six, including the two BENCHMARK.json leaves out).
-    */
+  /** Every span, and the listener's counter totals per span name. */
   private def spansJson(tr: Trace, rec: Record): String = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.createObjectNode().put("run_id", tr.runId)

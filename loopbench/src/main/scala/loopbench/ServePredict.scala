@@ -7,10 +7,13 @@ import graft.ml.LinUcb
 import graft.serving.PredictionServer
 
 /** The prediction endpoint under independent users: an open loop at a
-  * fixed rate well under capacity (the reference's scheduler sends
-  * whether or not earlier requests were answered), latency timed from
-  * each request's due time; then a closed loop with nproc clients that
-  * measures capacity. Requests have the reference shape: 8
+  * fixed rate (the reference's scheduler sends whether or not earlier
+  * requests were answered), latency timed from each request's due time;
+  * then closed loops that find capacity by doubling the client count
+  * until throughput stops rising. Every user request opens a connection
+  * of its own, as independent callers do. A last probe sends
+  * back-to-back requests over one kept-alive connection, where the JDK
+  * server's Nagle stall shows. Requests have the reference shape: 8
   * observations of dim 20, 20 actions. The model is a seeded LinUCB
   * model built directly (training is train_pipeline's business), so
   * this workload never starts Spark.
@@ -20,23 +23,42 @@ object ServePredict {
   val Actions = 20
   val ObsPerRequest = 8
   val Pool = 512
-  val Rate = 200.0 // requests per second in the open loop
+  /** Open-loop requests per second: about a tenth of the capacity the
+    * sweep below measures on a 4-core host (~3000 req/s). Each run
+    * records the share it got (`serving.load_frac`). At a quarter of
+    * capacity, the host's slow spells, which cut capacity two- to
+    * threefold, pushed the open loop near saturation and its p50 up
+    * to twentyfold.
+    */
+  val Rate = 300.0
   val ColdRequests = 16
   val Senders = 32
-  val Setups = 5
+  val Setups = 9
+  /** Capacity sweep: closed-loop client counts, doubled while throughput
+    * still rises by more than `SweepGain`, each held `SweepSeconds`.
+    */
+  val SweepClients = Seq(1, 2, 4, 8, 16, 32)
+  val SweepGain = 1.1
+  val SweepSeconds = 1.0
+  /** The capacity phase is timed in this many windows; capacity is
+    * their median, so one pause does not move it.
+    */
+  val CapacityWindows = 8
+  /** Back-to-back requests of the kept-alive probe. */
+  val KeepAliveRequests = 24
 
   /** The open-loop warm-up, left out of the latency. */
   val WarmupSeconds = 2.0
 
   /** Open-loop and capacity phase lengths for a measuring time. */
   def phases(seconds: Int): (Double, Double) =
-    (math.max(5.0, 0.6 * seconds), math.max(2.0, 0.2 * seconds))
+    (math.max(5.0, 0.5 * seconds), math.max(4.0, 0.4 * seconds))
 
   def run(ctx: Ctx): Unit = {
     import ctx._
     // set-up: the model, the server, and the request pool with the
     // answer the model owes each request. It takes ~0.1 s, so it runs
-    // five times for a steady median.
+    // nine times for a steady median.
     val (model, server, obs, bodies, want) = ctx.setup(Setups) { k =>
       val m = seededModel(seed)
       val srv = new PredictionServer(m,
@@ -66,7 +88,8 @@ object ServePredict {
     }
     try {
       // cold: the first requests a fresh JVM serves
-      val cold = Http.closedLoop(server.port, 1, ColdRequests, 0, bodies)
+      val cold = Http.closedLoop(server.port, 1, ColdRequests, 0, bodies,
+        fresh = true)
       cold.foreach(a => rec.add("cold_ms", a.latNs / 1e6))
       verify("cold", cold.map(a => (a.idx, a.status, a.body)))
 
@@ -86,10 +109,47 @@ object ServePredict {
         verify("traced open loop", t.map(o => (o._4, o._5, o._6)))
       }
 
-      val t0 = System.nanoTime()
-      val cap = Http.closedLoop(server.port, cpus, 0, capS, bodies)
-      rec.set("capacity_rps", cap.size / Ctx.sec(t0))
+      // capacity: double the clients until throughput stops rising, then
+      // hold the best count for the capacity phase
+      var best = (0, 0.0)
+      var prev = 0.0
+      SweepClients.takeWhile { c =>
+        val t0 = System.nanoTime()
+        val a = Http.closedLoop(server.port, c, 0, SweepSeconds, bodies,
+          fresh = true)
+        val rps = a.size / Ctx.sec(t0)
+        verify(s"capacity sweep, $c clients",
+          a.map(x => (x.idx, x.status, x.body)))
+        rec.add("sweep_clients", c)
+        rec.add("sweep_rps", rps)
+        rec.add("sweep_p99_ms",
+          a.map(_.latNs / 1e6).sorted.apply(((a.size - 1) * 0.99).toInt))
+        if (rps > best._2) best = (c, rps)
+        val rising = rps > prev * SweepGain
+        prev = rps
+        rising
+      }
+      val windows = (0 until CapacityWindows).map { _ =>
+        val t0 = System.nanoTime()
+        val a = Http.closedLoop(server.port, best._1, 0,
+          capS / CapacityWindows, bodies, fresh = true)
+        val rps = a.size / Ctx.sec(t0)
+        Ctx.log(f"capacity window: $rps%.0f req/s")
+        (rps, a)
+      }
+      windows.foreach(w => rec.add("capacity_window_rps", w._1))
+      val cap = windows.flatMap(_._2)
+      val rates = windows.map(_._1).sorted
+      val capacity = (rates((rates.size - 1) / 2) + rates(rates.size / 2)) / 2
+      rec.set("serving.capacity_rps", capacity)
+      rec.set("serving.capacity_clients", best._1)
+      rec.set("serving.load_frac", Rate / capacity)
       verify("capacity", cap.map(a => (a.idx, a.status, a.body)))
+
+      // kept-alive: one client, back-to-back requests on one connection
+      val kept = Http.closedLoop(server.port, 1, KeepAliveRequests, 0, bodies)
+      kept.foreach(a => rec.add("serving.keepalive_ms", a.latNs / 1e6))
+      verify("kept-alive probe", kept.map(a => (a.idx, a.status, a.body)))
     } finally server.stop()
 
     if (traced) {
@@ -118,9 +178,9 @@ object ServePredict {
     })
   }
 
-  /** Open loop: request i is due at i / Rate s; a sender thread posts it
-    * when one is free. Returns (due, sent, done, pool index, status,
-    * body), times in ns from the phase start.
+  /** Open loop: request i is due at i / Rate s; a sender thread posts it,
+    * on a connection of its own, when one is free. Returns (due, sent,
+    * done, pool index, status, body), times in ns from the phase start.
     */
   private def openLoop(ctx: Ctx, port: Int, bodies: IndexedSeq[String],
                        seconds: Double)
@@ -128,7 +188,6 @@ object ServePredict {
     val n = (seconds * Rate).toInt
     val out = new Array[(Long, Long, Long, Int, Int, String)](n)
     val senders = Executors.newFixedThreadPool(Senders)
-    val clients = ThreadLocal.withInitial(() => Http.client())
     val done = new CountDownLatch(n)
     val t0 = System.nanoTime()
     var i = 0
@@ -143,7 +202,7 @@ object ServePredict {
         val sent = System.nanoTime() - t0
         val idx = k % bodies.size
         val (st, body) = ctx.tr("serving.predict") {
-          scala.util.Try(Http.post(clients.get, port, bodies(idx)))
+          scala.util.Try(Http.postOnce(port, bodies(idx)))
             .getOrElse((-1, ""))
         }
         out(k) = (due, sent, System.nanoTime() - t0, idx, st, body)

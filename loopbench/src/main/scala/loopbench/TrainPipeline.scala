@@ -126,7 +126,7 @@ object TrainPipeline {
       LinUcb.evaluate(loaded, traj, "action", "obs", "reward").collect()(0)
     }
     val ms = Ctx.ms(t0)
-    ctx.op(ms, ms, rows.toDouble, on, warmup = i == 0)
+    ctx.op(ms, on, warmup = i == 0)
     if (on) {
       ctx.layers(t0, Layers: _*)
       rec.add("io.ingest_rows_per_s", rows / tr.seconds("io.ingest", t0))

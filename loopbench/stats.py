@@ -75,20 +75,14 @@ def end_to_end(raw):
 
     latency_ms is the median of the workload's operations after the
     warm-up (serve_predict: of its open-loop requests after a warm-up
-    phase); rate_per_s is items per second over the same operations
-    (serve_predict: its closed-loop capacity); mem_peak_mb is the JVM's
-    peak resident set."""
-    s, v = raw["series"], raw["values"]
+    phase); mem_peak_mb is the JVM's peak resident set."""
     out = {"setup_s": median(raw["setup_s"]),
-           "mem_peak_mb": v["jvm.mem_peak_mb"]}
+           "mem_peak_mb": raw["values"]["jvm.mem_peak_mb"]}
     if raw["workload"] == "serve_predict":
         lat, _ = open_loop(raw["open_loop"])
         out["latency_ms"] = quantile(lat, 50)
-        out["rate_per_s"] = v["capacity_rps"]
     else:
-        out["latency_ms"] = median(steady(s, "op_ms"))
-        out["rate_per_s"] = (1000.0 * sum(steady(s, "op_items")) /
-                             sum(steady(s, "op_wall_ms")))
+        out["latency_ms"] = median(steady(raw["series"], "op_ms"))
     return out
 
 

@@ -96,12 +96,9 @@ class EndToEnd(unittest.TestCase):
     def test_operation_workloads(self):
         raw = raw_record("feedback_loop", series={
             "op_ms": [900.0, 400.0, 500.0, 300.0, 600.0],
-            "op_wall_ms": [1000.0, 1000.0, 1000.0, 1000.0, 1000.0],
-            "op_items": [10.0, 20.0, 20.0, 20.0, 20.0],
             "op_warmup": [1, 0, 0, 0, 0]})
         e = stats.end_to_end(raw)
         self.assertEqual(e, {"latency_ms": 450.0,   # of 400, 500, 300, 600
-                             "rate_per_s": 20.0,    # 80 items in 4 s
                              "mem_peak_mb": 800.0,
                              "setup_s": 0.3})
         c = stats.cold_and_tail(raw)
@@ -111,11 +108,9 @@ class EndToEnd(unittest.TestCase):
     def test_warmup_operations_are_left_out(self):
         raw = raw_record("feedback_loop", series={
             "op_ms": [900.0, 800.0, 700.0, 400.0, 500.0, 600.0],
-            "op_wall_ms": [1000.0] * 6, "op_items": [10.0] * 6,
             "op_warmup": [1, 1, 1, 0, 0, 0]})
         e = stats.end_to_end(raw)
         self.assertEqual(e["latency_ms"], 500.0)
-        self.assertEqual(e["rate_per_s"], 10.0)
         self.assertEqual(stats.cold_and_tail(raw)["op.first_ms"], 900.0)
 
 
@@ -125,11 +120,9 @@ class EndToEnd(unittest.TestCase):
                 for i in range(1000)]
         raw = raw_record("serve_predict", open_loop=rows,
                          series={"cold_ms": [40.0, 50.0, 45.0]},
-                         values={"capacity_rps": 90.0,
-                                 "jvm.mem_peak_mb": 300.0})
+                         values={"jvm.mem_peak_mb": 300.0})
         e = stats.end_to_end(raw)
         self.assertEqual(e["latency_ms"], 500.0)
-        self.assertEqual(e["rate_per_s"], 90.0)
         c = stats.cold_and_tail(raw)
         self.assertEqual(c["serving.predict_tail_ms"], 990.0)
         self.assertEqual(c["op.first_ms"], 45.0)
@@ -137,16 +130,14 @@ class EndToEnd(unittest.TestCase):
 
 class Result(unittest.TestCase):
     SPEC = {"end_to_end": [{"name": n, "unit": u} for n, u in
-                           [("latency_ms", "ms"), ("rate_per_s", "1/s"),
-                            ("mem_peak_mb", "MB"), ("setup_s", "s")]],
+                           [("latency_ms", "ms"), ("mem_peak_mb", "MB"),
+                            ("setup_s", "s")]],
             "per_layer": [{"name": "io.ingest_s", "unit": "s"},
                           {"name": "text.exact_s", "unit": "s"},
                           {"name": "io.ingest.jobs", "unit": "count"},
                           {"name": "op.first_ms", "unit": "ms"},
                           {"name": "trace.overhead_frac", "unit": "ratio"}]}
     SERIES = {"op_ms": [9.0, 4.0, 5.0, 6.0],
-              "op_wall_ms": [9.0, 4.0, 5.0, 6.0],
-              "op_items": [1.0, 1.0, 1.0, 1.0],
               "op_traced": [0, 0, 1, 0], "op_warmup": [1, 0, 0, 0],
               "io.ingest_s": [0.25]}
 
