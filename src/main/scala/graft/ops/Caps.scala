@@ -32,13 +32,13 @@ object Caps {
         }
     }
 
-  /** Per-JVM memo of guard candidate-volume estimates, keyed on the
-    * canonicalized ANALYZED plan of the priced relation — the exact
-    * [[Materialize]] keying, so the staleness contract matches: a
-    * fresh corpus is a different path → a different canonical plan →
-    * a fresh estimate; only re-pricing the SAME relation in the same
-    * JVM is skipped (measured per warm invocation before memoization:
-    * cooc 0.54 s, interval 0.91 s, ngram 0.12 s, embed 0.13 s —
+  /** Per-JVM memo of guard candidate-volume estimates, keyed on
+    * [[planKey]] of the priced relation — the [[Materialize]] keying, so
+    * the staleness contract matches: a fresh corpus is a different path
+    * → a different key → a fresh estimate; only re-pricing the SAME
+    * relation in the same JVM is skipped (measured per warm invocation
+    * before memoization: cooc 0.54 s, interval 0.91 s, ngram 0.12 s,
+    * embed 0.13 s —
     * `sweeps/sweep_guardcost.jsonl`). The memo stores the ESTIMATE,
     * never the over/under-cap decision: every call still compares
     * against ITS cap, so a planted over-cap corpus refuses on every
@@ -53,22 +53,30 @@ object Caps {
                        tag: String)(compute: => Long): Long =
     estMemo.computeIfAbsent(tag + "|" + planKey(keyDf), _ => compute)
 
-  /** Canonical-plan key. `canonicalized.toString` alone is blind to
-    * LocalRelation DATA (toString prints only the schema — two
-    * different in-memory corpora of the same shape would collide, the
-    * failure mode PairGuardSpec's over-cap-then-under-cap sequence
-    * exercises), so local rows are folded in by structural hash.
-    * File-backed relations carry their path in the plan string, which
-    * is what makes "fresh corpus ⇒ fresh estimate" hold.
+  /** Canonical-plan key, shared by every per-JVM memo keyed on a
+    * relation ([[memoizedEstimate]], [[Materialize.parquet]],
+    * [[graft.text.Cluster.materializedClusters]]).
+    * `canonicalized.toString` alone is blind to what a leaf reads: it
+    * prints a LocalRelation's schema but not its rows (two in-memory
+    * corpora of one shape would collide — PairGuardSpec's
+    * over-cap-then-under-cap sequence), and a parquet scan as
+    * `Relation [...] parquet`, with no path (two same-schema corpora on
+    * disk would collide). So local rows are folded in by structural hash
+    * and file-backed relations by their root paths, which is what makes
+    * "fresh corpus ⇒ fresh key" hold.
     */
   private[graft] def planKey(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
     val analyzed = df.queryExecution.analyzed
     val localData = analyzed.collect {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         l.data.hashCode
     }
-    analyzed.canonicalized.toString + "|local:" +
-      localData.mkString(",")
+    val files = analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths }.flatten
+    analyzed.canonicalized.toString + "|local:" + localData.mkString(",") +
+      "|files:" + files.mkString(",")
   }
 
   /** Saturating double→long for guard estimates. Guard sums run in

@@ -19,11 +19,10 @@ object Materialize {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Return a parquet-backed copy of `df`, computing and writing it at
-    * most once per (tag, canonical plan) per JVM.
+    * most once per (tag, [[Caps.planKey]]) per JVM.
     */
   def parquet(df: DataFrame, tag: String): DataFrame = {
-    val key = tag + "|" +
-      df.queryExecution.analyzed.canonicalized.toString
+    val key = tag + "|" + Caps.planKey(df)
     val path = memo.computeIfAbsent(key, { _ =>
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_$tag").toString

@@ -36,7 +36,10 @@ final class PredictionServer(model: LinUcb.Model,
                              predictRoute: String = "/predict") {
 
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress(0), 0)
+  private val server = {
+    PredictionServer.noDelay()
+    HttpServer.create(new InetSocketAddress(0), 0)
+  }
 
   server.createContext(healthRoute, new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
@@ -100,6 +103,18 @@ final class PredictionServer(model: LinUcb.Model,
 }
 
 object PredictionServer {
+  /** Turn on TCP_NODELAY for the JDK server unless the user has set
+    * `sun.net.httpserver.nodelay` already. The server leaves it off, so
+    * on a kept-alive connection a response written in more than one
+    * packet waits for the client's delayed ACK (Nagle): ~40-45 ms per
+    * answer instead of a few. The JDK reads the property once, when the
+    * first server in the JVM is created, so every server calls this
+    * before it is created.
+    */
+  private def noDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** The local feedback bus: append one JSON line per prediction to an
     * NDJSON file — the exact source shape `Streams`' logger loop and
     * `FeatureStore.streamingImport` consume.

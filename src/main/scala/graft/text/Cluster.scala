@@ -162,8 +162,8 @@ object Cluster {
   def materializedClusters(docs: DataFrame, textCol: String, idCol: String,
                            n: Int, minJaccard: Double): DataFrame = {
     val spark = docs.sparkSession
-    val key = Seq(docs.queryExecution.analyzed.canonicalized.toString,
-      textCol, idCol, n, minJaccard).mkString("|")
+    val key = Seq(graft.ops.Caps.planKey(docs), textCol, idCol, n,
+      minJaccard).mkString("|")
     val path = memo.computeIfAbsent(key, { _ =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft_clusters").toString

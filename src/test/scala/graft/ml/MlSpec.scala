@@ -58,18 +58,104 @@ class MlSpec extends SparkSpec {
     assert(r == ((2L, 1L, 2.0)))
   }
 
+  private def sameModel(a: LinUcb.Model, b: LinUcb.Model): Boolean = {
+    def bits(v: Array[Double]) =
+      v.map(java.lang.Double.doubleToRawLongBits).toSeq
+    a.dim == b.dim && a.alpha == b.alpha && a.lambda == b.lambda &&
+      a.foldedBy == b.foldedBy && a.lastBatch == b.lastBatch &&
+      a.actions.size == b.actions.size &&
+      a.actions.zip(b.actions).forall { case (x, y) =>
+        x.action == y.action && x.n == y.n &&
+          bits(x.theta) == bits(y.theta) && bits(x.aInv) == bits(y.aInv) &&
+          x.stats.map(s => (bits(s.xx), bits(s.bx), s.n)) ==
+            y.stats.map(s => (bits(s.xx), bits(s.bx), s.n))
+      }
+  }
+
+  private def randomModel(seed: Int, dim: Int = 3): LinUcb.Model = {
+    val rnd = new scala.util.Random(seed)
+    val rows = Seq.fill(60) {
+      val x = Array.fill(dim)(rnd.nextGaussian())
+      (rnd.nextInt(3), x.toSeq, rnd.nextGaussian())
+    }
+    LinUcb.fit(rows.toDF("action", "x", "reward"), "action", "x",
+      "reward", dim, alpha = 0.5, lambda = 0.7)
+  }
+
   test("model save/load round-trips (A18)") {
-    val df = Seq((0, Seq(1.0, 0.0), 1.0), (1, Seq(0.0, 1.0), 2.0))
-      .toDF("action", "x", "reward")
-    val m = LinUcb.fit(df, "action", "x", "reward", dim = 2)
+    // bit-exact, statistics and the fold marker included
+    val m = randomModel(1).copy(foldedBy = "q-1", lastBatch = 41L)
+    assert(m.actions.forall(_.stats.isDefined), "fit fills the statistics")
     val path = Files.createTempDirectory("linucb").toString + "/model"
     LinUcb.save(spark, m, path)
-    val m2 = LinUcb.load(spark, path)
-    assert(m2.dim == m.dim && m2.alpha == m.alpha)
-    assert(m2.actions.map(_.action) == m.actions.map(_.action))
-    assert(m2.actions.zip(m.actions).forall { case (a, b) =>
-      a.theta.sameElements(b.theta) && a.aInv.sameElements(b.aInv)
+    assert(sameModel(LinUcb.load(spark, path), m))
+    // a model without statistics round-trips too, and save replaces
+    val bare = m.copy(actions = m.actions.map(_.copy(stats = None)))
+    LinUcb.save(spark, bare, path)
+    assert(sameModel(LinUcb.load(spark, path), bare))
+    assert(new java.io.File(path).getParentFile.list().toSeq == Seq("model"),
+      "save leaves no temp or checksum file behind")
+  }
+
+  test("save publishes atomically: a reader loading in a loop never " +
+      "fails and never sees a mixed model") {
+    val a = randomModel(2)
+    val b = randomModel(3)
+    val path = Files.createTempDirectory("linucb").toString + "/model"
+    LinUcb.save(spark, a, path)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val writer = new Thread(() => {
+      var i = 0
+      try while (!stop.get()) {
+        LinUcb.save(spark, if (i % 2 == 0) b else a, path); i += 1
+      } catch { case e: Throwable => failed.set(e) }
     })
+    writer.start()
+    var reads = 0
+    val seen = scala.collection.mutable.Set.empty[Int]
+    try {
+      val t0 = System.nanoTime()
+      def elapsedS = (System.nanoTime() - t0) / 1e9
+      while ((elapsedS < 2 || seen.size < 2) && elapsedS < 30 &&
+          failed.get() == null) {
+        val m = LinUcb.load(spark, path)
+        if (sameModel(m, a)) seen += 0
+        else if (sameModel(m, b)) seen += 1
+        else fail(s"read $reads saw a model that is neither a nor b")
+        reads += 1
+      }
+    } finally { stop.set(true); writer.join() }
+    assert(failed.get() == null, s"the writer failed: ${failed.get()}")
+    assert(seen == Set(0, 1) && reads > 10, s"$reads reads saw $seen")
+  }
+
+  test("update folds a batch's statistics: same model as a fit over " +
+      "history and batch together") {
+    // dyadic values (multiples of 1/8, |v| <= 2): every product and
+    // partial sum is exact in a double, so summation order cannot move
+    // a bit and the two models must agree exactly
+    val rnd = new scala.util.Random(4)
+    def rows(k: Int) = Seq.fill(k) {
+      (rnd.nextInt(4), Seq.fill(3)((rnd.nextInt(33) - 16) / 8.0),
+        (rnd.nextInt(33) - 16) / 8.0)
+    }
+    val history = rows(80)
+    val batch = rows(30) :+ ((7, Seq(1.0, 0.5, -0.25), 2.0)) // new action
+    def df(r: Seq[(Int, Seq[Double], Double)]) =
+      r.toDF("action", "x", "reward")
+    val prev = LinUcb.fit(df(history), "action", "x", "reward", 3,
+      alpha = 0.4, lambda = 0.5)
+    val (observed, stats) =
+      LinUcb.observeStats(df(batch), "action", "x", "reward", 3)
+    assert(observed.count() == batch.size)
+    val folded = LinUcb.update(prev, stats())
+    val full = LinUcb.fit(df(history ++ batch), "action", "x", "reward", 3,
+      alpha = 0.4, lambda = 0.5)
+    assert(sameModel(folded, full))
+    assert(folded.actions.map(_.n).sum == history.size + batch.size)
+    val bare = prev.copy(actions = prev.actions.map(_.copy(stats = None)))
+    intercept[IllegalArgumentException](LinUcb.update(bare, stats()))
   }
 
   test("trajectory generation is seeded-deterministic with the " +

@@ -84,4 +84,27 @@ class PredictionServerSpec extends SparkSpec {
       assert(resp.statusCode() == 400)
     } finally server.stop()
   }
+
+  test("kept-alive connections answer without the Nagle stall") {
+    // With TCP_NODELAY off, each answer on a reused connection waits for
+    // the client's delayed ACK, ~40 ms: 20 requests would take ~800 ms.
+    val server = new PredictionServer(trainedModel(), _ => ())
+    server.start()
+    try {
+      val client = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${server.port}/predict"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          """{"instances":[{"observation":[[0.5,-0.2,0.9,0.1]]}]}"""))
+        .build()
+      def send(): Unit = assert(client.send(req,
+        HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      send() // open the connection
+      val t0 = System.nanoTime()
+      (1 to 20).foreach(_ => send())
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 20 * 40 / 2, f"20 kept-alive requests took $ms%.0f ms")
+    } finally server.stop()
+  }
 }

@@ -581,6 +581,147 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  private type Row3 = (Int, Seq[Double], Double)
+
+  private def banditRows(rnd: scala.util.Random, k: Int,
+                         dim: Int): Seq[Row3] =
+    Seq.fill(k)((rnd.nextInt(3), Seq.fill(dim)(rnd.nextDouble() * 2 - 1),
+      rnd.nextDouble() * 2 - 1))
+
+  private def fitRows(rows: Seq[Row3], dim: Int) =
+    graft.ml.LinUcb.fit(rows.toDF("action", "obs", "reward"), "action",
+      "obs", "reward", dim)
+
+  test("retrainLoop folds each trigger's batch into the published " +
+      "model: after k triggers it equals a one-shot fit over every row") {
+    import graft.ml.LinUcb
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("fold").toString
+    val dim = 4
+    val rnd = new scala.util.Random(11)
+    // the published model holds history the training table lacks: a
+    // fold keeps it, a refit from the table would drop it
+    val history = banditRows(rnd, 200, dim)
+    LinUcb.save(spark, fitRows(history, dim), s"$dir/model")
+    val in = MemoryStream[Row3]
+    val q = Streams.retrainLoop(in.toDF().toDF("action", "obs", "reward"),
+      s"$dir/train", s"$dir/model", s"$dir/ckpt", dim,
+      Trigger.ProcessingTime("0 seconds"))
+    // an empty micro-batch among them folds nothing and must not stall
+    val batches = Seq(banditRows(rnd, 60, dim), banditRows(rnd, 60, dim),
+      Nil, banditRows(rnd, 60, dim), banditRows(rnd, 60, dim))
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    val all = history ++ batches.flatten
+    val folded = LinUcb.load(spark, s"$dir/model")
+    val full = fitRows(all, dim)
+    assert(folded.lastBatch == 4L)
+    assert(spark.read.parquet(s"$dir/train").count() == 240)
+    assert(folded.actions.map(_.action) == full.actions.map(_.action))
+    // Tolerance. Folded and one-shot statistics add the same IEEE terms
+    // (x_i*x_j, r*x_i) in different orders. Any order of n terms lands
+    // within γ(n-1)·Σ|t| of the exact sum, γ(k) = kε/(1-kε), ε = 2^-53,
+    // so two orders differ by at most 2γ(n)·Σ|t|, per entry.
+    val eps = math.pow(2, -53)
+    def gamma(n: Long) = n * eps / (1 - n * eps)
+    // θ and A⁻¹: λ = 1 makes A ⪰ I, so ‖A⁻¹‖ ≤ 1 and κ(A) ≤ 1 + n·d
+    // (|x| ≤ 1, n ≤ 200 rows per action here: κ ≤ 801). The statistics'
+    // relative difference, ≤ 2γ(n) ≈ 4.4e-14, grows by at most κ through
+    // the solve (≈ 3.6e-11), plus Gauss-Jordan's own ~d·κ·ε (≈ 3.6e-13)
+    // on each side. Normwise, 1e-9 covers that with a margin of ~25.
+    val solveTol = 1e-9
+    def close(a: Array[Double], b: Array[Double]) = {
+      val scale = math.max(b.map(math.abs).max, 1e-300)
+      a.indices.forall(i => math.abs(a(i) - b(i)) <= solveTol * scale)
+    }
+    folded.actions.zip(full.actions).foreach { case (f, o) =>
+      val rows = all.filter(_._1 == f.action)
+      assert(rows.size <= 200, "the tolerance below assumes n <= 200")
+      val (fs, os) = (f.stats.get, o.stats.get)
+      assert(f.n == rows.size && fs.n == os.n && f.n == o.n)
+      val g = 2 * gamma(rows.size)
+      for (i <- 0 until dim; j <- 0 until dim) {
+        val absSum = rows.map(r => math.abs(r._2(i) * r._2(j))).sum
+        assert(math.abs(fs.xx(i * dim + j) - os.xx(i * dim + j)) <=
+          g * absSum, s"xx($i,$j) of action ${f.action}")
+      }
+      for (i <- 0 until dim) {
+        val absSum = rows.map(r => math.abs(r._3 * r._2(i))).sum
+        assert(math.abs(fs.bx(i) - os.bx(i)) <= g * absSum,
+          s"bx($i) of action ${f.action}")
+      }
+      assert(close(f.theta, o.theta), s"theta of action ${f.action}")
+      assert(close(f.aInv, o.aInv), s"aInv of action ${f.action}")
+    }
+  }
+
+  test("retrainLoop bootstraps with a full fit when no model, or one " +
+      "without statistics, is published") {
+    import graft.ml.LinUcb
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("bootstrap").toString
+    val dim = 3
+    val rnd = new scala.util.Random(12)
+    // the table holds history no model has seen: only a fit reads it
+    banditRows(rnd, 50, dim).toDF("action", "obs", "reward")
+      .write.parquet(s"$dir/train")
+    val in = MemoryStream[Row3]
+    val q = Streams.retrainLoop(in.toDF().toDF("action", "obs", "reward"),
+      s"$dir/train", s"$dir/model", s"$dir/ckpt", dim,
+      Trigger.ProcessingTime("0 seconds"))
+    try {
+      in.addData(banditRows(rnd, 20, dim): _*)
+      q.processAllAvailable()
+      val m1 = LinUcb.load(spark, s"$dir/model")
+      assert(m1.actions.map(_.n).sum == 70L)
+      assert(m1.actions.forall(_.stats.isDefined))
+      // a model without statistics cannot take a fold: refit the table
+      LinUcb.save(spark,
+        m1.copy(actions = m1.actions.map(_.copy(stats = None))),
+        s"$dir/model")
+      in.addData(banditRows(rnd, 10, dim): _*)
+      q.processAllAvailable()
+      val m2 = LinUcb.load(spark, s"$dir/model")
+      assert(m2.actions.map(_.n).sum == 80L)
+      assert(m2.actions.forall(_.stats.isDefined) && m2.lastBatch == 1L)
+    } finally q.stop()
+  }
+
+  test("retrainLoop replay after a publish does not fold the batch " +
+      "twice (crash injection)") {
+    import graft.ml.LinUcb
+    val dir = Files.createTempDirectory("retrainreplay").toString
+    val dim = 2
+    LinUcb.save(spark, fitRows(Seq((0, Seq(1.0, 0.0), 1.0),
+      (1, Seq(0.0, 1.0), 1.0)), dim), s"$dir/model")
+    Seq((0, Seq(0.5, 0.5), 1.0), (1, Seq(0.2, 0.8), 2.0))
+      .toDF("action", "obs", "reward").write.json(s"$dir/topic")
+    def fire(ckpt: String): Unit = {
+      val q = Streams.retrainLoop(spark.readStream
+          .schema("action INT, obs ARRAY<DOUBLE>, reward DOUBLE")
+          .json(s"$dir/topic"),
+        s"$dir/train", s"$dir/model", ckpt, dim, Trigger.AvailableNow())
+      try assert(q.awaitTermination(120000), "drain did not terminate")
+      finally q.stop()
+    }
+    def n() = LinUcb.load(spark, s"$dir/model").actions.map(_.n).sum
+    fire(s"$dir/ckpt")
+    assert(n() == 4L)
+    // the crash window: model published, checkpoint commit not written
+    val commitDir = new java.io.File(s"$dir/ckpt/commits")
+    val last = commitDir.listFiles().filter(_.getName.forall(_.isDigit))
+      .maxBy(_.getName.toLong)
+    assert(last.delete())
+    new java.io.File(commitDir, s".${last.getName}.crc").delete()
+    fire(s"$dir/ckpt") // replays batch 0
+    assert(n() == 4L, "the replayed batch was folded twice")
+    assert(LinUcb.load(spark, s"$dir/model").lastBatch == 0L)
+    assert(spark.read.parquet(s"$dir/train").count() == 2L)
+    // a fresh checkpoint is a new query: its batch 0 is new data
+    fire(s"$dir/ckpt2")
+    assert(n() == 6L)
+  }
+
   test("scoreAndPublish writes scored predictions to the topic path") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("publish").toString
